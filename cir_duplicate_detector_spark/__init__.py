@@ -65,7 +65,8 @@ __all__ = [
     "chunks_hamming",
     "calculate_absolute_threshold",
     "drop_literal_series_duplicates",
-    # reference execution-harness shims (raise with guidance)
+    # reference execution-harness shims (functional Spark equivalents,
+    # see compat.py)
     "PDQHashTree",
     "run_in_parallel",
     # extension operator namespaces
@@ -137,12 +138,9 @@ def detect_duplicates(
         if work.isEmpty():
             warnings.warn("input dataframe is empty; returning empty result")
 
-    out = work.select("index")
-    result_cols: list[str] = []
-    if has_url:
-        url_dups = find_url_duplicates(work, indexes_to_check)
-        out = out.join(url_dups, "index", "left")
-        result_cols.append("url_duplicates")
+    # D6: each result is one row per index with at least one duplicate,
+    # so their full outer join on `index` is exactly the rows to keep.
+    out = find_url_duplicates(work, indexes_to_check) if has_url else None
     if has_pdq:
         pdq_dups = find_pdq_hash_duplicates(
             work,
@@ -151,13 +149,5 @@ def detect_duplicates(
             pdq_duplicate_detection_method,
             max_hex_len=max_hex_len,
         )
-        out = out.join(pdq_dups, "index", "left")
-        result_cols += ["pdq_hash_duplicates", "pdq_hash_similarities"]
-
-    # D6: keep rows with at least one non-null result column.
-    keep_pred = None
-    for c in ("url_duplicates", "pdq_hash_duplicates"):
-        if c in out.columns:
-            p = F.col(c).isNotNull()
-            keep_pred = p if keep_pred is None else (keep_pred | p)
-    return out.where(keep_pred).select("index", *result_cols)
+        out = pdq_dups if out is None else out.join(pdq_dups, "index", "full")
+    return out

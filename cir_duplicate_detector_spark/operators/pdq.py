@@ -20,8 +20,9 @@ Spark-first physical strategies (chosen like the reference's
   never implemented (``mih``, ``pdq_hash.py:218-220``) and the analogue
   of its BK-tree pruning (``bk_tree.py``); it is shuffle-hash-join
   shaped, i.e. the 100 TB-scale path.
-* ``auto`` — banded when the bit budget allows selective bands
-  (n <= 31), else naive; mirrors the reference's observed crossover
+* ``auto`` — banded when a band layout covers the bit budget AND is
+  selective for the corpus size (one eager ``sum(size(pdq_hash))``
+  scan), else naive; mirrors the reference's observed crossover
   (BK-tree wins only for t >~ 0.91, reference README.md:88).
 
 ``bk-tree`` and ``mih`` are accepted as aliases of ``banded`` for API
@@ -31,7 +32,6 @@ compatibility with the reference.
 from __future__ import annotations
 
 import logging
-import warnings
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
@@ -49,7 +49,7 @@ from ..functions.hashes import (
     hex_to_chunks64,
     similarity_from_distance,
 )
-from .probes import probe_column_frame
+from .probes import is_empty_probe_list, restrict_to_probes
 
 RESULT_SCHEMA = (
     "index string, pdq_hash_duplicates array<string>, "
@@ -98,19 +98,19 @@ def drop_literal_series_duplicates(df: DataFrame, subset=None) -> DataFrame:
 
 
 def decoded_hashes(
-    df: DataFrame, assert_max_hex: int | None = None
+    df: DataFrame, assert_max_hex: int | None = 64
 ) -> DataFrame:
     """Attach the hash decoding (reference P7): 8×32-bit ``chunks`` array
     (SQL-oracle-friendly form) plus 4 flat 64-bit ``h0..h3`` columns (the
     similarity-join hot path; see :func:`..functions.hashes.hex_to_chunks64`).
 
-    ``assert_max_hex``: when set, a hash LONGER than this raises at row
-    time (one codegen'd length comparison — no extra scan, no job).
-    The chunk decoder left-pads to exactly 64 hex chars, which silently
-    LEFT-TRUNCATES anything longer, so callers that skipped the
-    detection scan on the strength of the 256-bit PDQ contract
-    (``find_pdq_hash_duplicates``'s ``max_hex_len=64`` default,
-    VERDICT r12 item 2) fail loudly if the contract is violated.
+    ``assert_max_hex`` (default ``64``, the 256-bit PDQ contract): a hash
+    LONGER than this raises at row time (one codegen'd length comparison
+    — no extra scan, no job). The chunk decoder left-pads to exactly 64
+    hex chars, which silently LEFT-TRUNCATES anything longer, so every
+    decode fails loudly instead when the contract is violated. ``None``
+    drops the guard; only a caller that measured the longest hash
+    (``find_pdq_hash_duplicates(max_hex_len=None)``) passes it.
     """
     exploded = exploded_hashes(df)
     if assert_max_hex is not None:
@@ -127,8 +127,8 @@ def decoded_hashes(
                         ),
                         F.col("hash"),
                         F.lit(
-                            "; pass max_hex_len explicitly (or None to"
-                            " auto-detect) for longer hashes"
+                            "; pass max_hex_len (None to auto-detect) to "
+                            "find_pdq_hash_duplicates for longer hashes"
                         ),
                     )
                 )
@@ -204,28 +204,35 @@ def _grid_size(spark) -> int:
     return max(2, math.isqrt(spark.sparkContext.defaultParallelism * 8))
 
 
+def _all_pairs_joined(
+    p: DataFrame, c: DataFrame, broadcast_probe: bool
+) -> DataFrame:
+    """Every probe row against every corpus row. A restricted probe set
+    is broadcast and the corpus streams (the reference's asymmetric
+    probe/corpus shape, P9); the full self-join uses the block-grid join
+    (:func:`_grid_joined`) — the O(N²) comparison count is inherent to
+    an all-pairs scan, but the memory footprint must not be:
+    broadcasting the whole corpus OOMs executors long before the math
+    finishes at scale.
+    """
+    spark = p.sparkSession
+    if broadcast_probe:
+        slices = spark.sparkContext.defaultParallelism * 2
+        return c.repartition(slices).crossJoin(F.broadcast(p))
+    return _grid_joined(p, c, _grid_size(spark))
+
+
 def _naive_pairs(
     probe: DataFrame, corpus: DataFrame, n_bits: int, broadcast_probe: bool
 ) -> DataFrame:
     """All-pairs scan: probe × corpus, keep dist<=n, self excluded.
 
     The Hamming predicate is a flat xor/bit_count expression inside
-    whole-stage codegen. Physical shape: with a restricted probe set the
-    probe is broadcast and the corpus streams (the reference's
-    asymmetric probe/corpus shape, P9); the full self-join uses the
-    block-grid join (:func:`_grid_joined`) — the O(N²) comparison count
-    is inherent to the naive backend, but the memory footprint must not
-    be: broadcasting the whole corpus OOMs executors long before the
-    math finishes at scale.
+    whole-stage codegen, over :func:`_all_pairs_joined`.
     """
-    spark = probe.sparkSession
-    p = _hash_side(probe, "p_")
-    c = _hash_side(corpus, "c_")
-    if broadcast_probe:
-        slices = spark.sparkContext.defaultParallelism * 2
-        joined = c.repartition(slices).crossJoin(F.broadcast(p))
-    else:
-        joined = _grid_joined(p, c, _grid_size(spark))
+    joined = _all_pairs_joined(
+        _hash_side(probe, "p_"), _hash_side(corpus, "c_"), broadcast_probe
+    )
     # Cascaded short-circuit predicate: the cumulative prefix sums
     # bit_count(x0) <= n, bit_count(x0)+bit_count(x1) <= n, ... are each
     # implied by the full distance bound (bit counts are non-negative),
@@ -256,29 +263,23 @@ def _bits_pairs(
     similarity still normalized by 256). Decodes to the reference's
     binary-string form and compares with the padded Hamming kernel.
     Slower than the chunked fast path; only selected when long hashes
-    are actually present.
+    are actually present. A pair may repeat (one row per matching hash
+    pair); both callers reduce to the minimum distance.
     """
-    spark = probe.sparkSession
     p = probe.select(
         F.col("index").alias("p_index"), hex_to_bits("hash").alias("p_bits")
     )
     c = corpus.select(
         F.col("index").alias("c_index"), hex_to_bits("hash").alias("c_bits")
     )
-    if broadcast_probe:
-        slices = spark.sparkContext.defaultParallelism * 2
-        joined = c.repartition(slices).crossJoin(F.broadcast(p))
-    else:
-        joined = _grid_joined(p, c, _grid_size(spark))
     return (
-        joined.where(F.col("p_index") != F.col("c_index"))
+        _all_pairs_joined(p, c, broadcast_probe)
+        .where(F.col("p_index") != F.col("c_index"))
         .withColumn("dist", bits_hamming(F.col("p_bits"), F.col("c_bits")))
         .where(F.col("dist") <= F.lit(n_bits))
         .select(
             F.col("p_index").alias("index"), F.col("c_index").alias("dup"), "dist"
         )
-        .groupBy("index", "dup")
-        .agg(F.min("dist").alias("dist"))
     )
 
 
@@ -389,10 +390,29 @@ def symmetrize_and_aggregate(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _check_pdq_column_type(df: DataFrame) -> None:
-    """Reference P5 (``pdq_hash.py:165-176``): hash list elements must be
-    strings. A typed schema makes this a plan-time check — no job runs.
+def _pdq_pairs(
+    df: DataFrame,
+    pqd_hash_similarity_threshold: float,
+    indexes_to_check: list[str] | DataFrame | None,
+    duplicate_detection_method: str,
+    max_hex_len: int | None,
+) -> DataFrame:
+    """The one PDQ pair pipeline behind both entry points: flat
+    ``(index, dup, dist)`` matches of the probe set against the corpus,
+    self excluded. A pair may repeat; callers reduce to min(dist).
+
+    Validates the columns and the method name, restricts the probe side
+    (:func:`.probes.restrict_to_probes` — the restricted side is the
+    broadcast side, P9), decodes under the ``max_hex_len`` length guard
+    (``None``: measure it with a small eager scan), routes longer hashes
+    to the general-length path, resolves ``"auto"`` and picks the join.
     """
+    if "pdq_hash" not in df.columns or "index" not in df.columns:
+        raise ValueError(
+            "PDQ duplicate detection requires `index` and `pdq_hash` columns"
+        )
+    # Reference P5 (``pdq_hash.py:165-176``): hash list elements must be
+    # strings. A typed schema makes this a plan-time check — no job runs.
     dtype = df.schema["pdq_hash"].dataType
     if not (
         isinstance(dtype, ArrayType)
@@ -402,6 +422,63 @@ def _check_pdq_column_type(df: DataFrame) -> None:
             "`pdq_hash` column must be array<string> (a list of hex hash "
             f"strings); got {dtype.simpleString()}"
         )
+    n_bits = calculate_absolute_threshold(
+        HASH_BITS, pqd_hash_similarity_threshold
+    )
+    method = _METHOD_ALIASES.get(duplicate_detection_method)
+    if method is None:
+        raise ValueError(
+            f"unknown duplicate_detection_method {duplicate_detection_method!r};"
+            f" expected one of {sorted(_METHOD_ALIASES)}"
+        )
+    broadcast_probe = indexes_to_check is not None
+
+    exploded = exploded_hashes(df)
+    detected = max_hex_len is None
+    if detected:
+        max_hex_len = (
+            exploded.agg(F.max(F.length("hash")).alias("m")).first()["m"] or 0
+        )
+    if max_hex_len > 64:
+        corpus, join = exploded, _bits_pairs
+    else:
+        # A detected bound is known-true; an ASSUMED bound (the 64
+        # default, or a caller-passed value) gets the row-time length
+        # guard so a contract-violating longer hash raises instead of
+        # left-truncating.
+        corpus = decoded_hashes(df, None if detected else max_hex_len)
+        if method == "auto":
+            # One cheap eager scan decides the physical strategy: banded
+            # only when a pigeonhole layout exists AND is selective for
+            # this corpus — the same information the reference's user
+            # encodes by hand when choosing naive vs bk-tree per the
+            # README crossover guidance. sum(size) is an upper bound on
+            # the deduped hash count (scan-only, no explode/dedup shuffle
+            # — counting `exploded` exactly cost ~40% of the whole naive
+            # query at sf0.1); selectivity only needs the order of
+            # magnitude.
+            n_hashes = (
+                df.agg(
+                    F.sum(
+                        F.size(F.coalesce(F.col("pdq_hash"), F.array()))
+                    ).alias("n")
+                ).first()["n"]
+                or 0
+            )
+            layout = _pick_band_layout(n_bits, n_hashes)
+            method = "naive" if layout is None else "banded"
+        join = _naive_pairs if method == "naive" else _banded_pairs
+    # Reference P11 stats logging (`pdq_hash.py:236-255`) — plan-time
+    # facts only; execution timing/row counts live in the Spark UI.
+    logger.info(
+        "pdq pairs: threshold=%s -> n_bits=%d, join=%s, probed=%s",
+        pqd_hash_similarity_threshold,
+        n_bits,
+        join.__name__,
+        broadcast_probe,
+    )
+    probe = restrict_to_probes(corpus, indexes_to_check)
+    return join(probe, corpus, n_bits, broadcast_probe)
 
 
 def get_pdq_fuzzy_duplicates(
@@ -417,37 +494,22 @@ def get_pdq_fuzzy_duplicates(
     returns the same information as a pair DataFrame; self-pairs are
     excluded (the reference's caller strips them immediately,
     ``pdq_hash.py:33-40``).
+
+    Same pair pipeline as :func:`find_pdq_hash_duplicates` under its
+    ``max_hex_len=64`` default: a hash longer than 64 hex chars raises
+    at row time (use ``find_pdq_hash_duplicates`` for longer hashes).
     """
-    _check_pdq_column_type(df)
-    n_bits = calculate_absolute_threshold(
-        HASH_BITS, pqd_hash_similarity_threshold
+    return (
+        _pdq_pairs(
+            df,
+            pqd_hash_similarity_threshold,
+            indexes_to_check,
+            duplicate_detection_method,
+            max_hex_len=64,
+        )
+        .groupBy("index", "dup")
+        .agg(F.min("dist").alias("dist"))
     )
-    method = _METHOD_ALIASES.get(duplicate_detection_method)
-    if method is None:
-        raise ValueError(
-            f"unknown duplicate_detection_method {duplicate_detection_method!r};"
-            f" expected one of {sorted(_METHOD_ALIASES)}"
-        )
-    corpus = decoded_hashes(df)
-    if isinstance(indexes_to_check, DataFrame):
-        probe = corpus.join(
-            F.broadcast(probe_column_frame(indexes_to_check)), "index", "semi"
-        )
-        broadcast_probe = True
-    elif indexes_to_check is not None:
-        probe = corpus.where(
-            F.col("index").isin([str(i) for i in indexes_to_check])
-        )
-        broadcast_probe = True
-    else:
-        probe, broadcast_probe = corpus, False
-    if method == "auto":
-        method = "banded" if _pick_band_layout(n_bits) is not None else "naive"
-    if method == "naive":
-        pairs = _naive_pairs(probe, corpus, n_bits, broadcast_probe)
-    else:
-        pairs = _banded_pairs(probe, corpus, n_bits, broadcast_probe)
-    return pairs.groupBy("index", "dup").agg(F.min("dist").alias("dist"))
 
 
 def find_pdq_hash_duplicates(
@@ -483,102 +545,14 @@ def find_pdq_hash_duplicates(
     contract raises AT ROW TIME (a codegen'd length guard) instead of
     being silently left-truncated by the chunk decoder's ``lpad``.
     """
-    spark = df.sparkSession
-    if "pdq_hash" not in df.columns or "index" not in df.columns:
-        raise ValueError(
-            "find_pdq_hash_duplicates requires `index` and `pdq_hash` columns"
+    if is_empty_probe_list(indexes_to_check):
+        return df.sparkSession.createDataFrame([], RESULT_SCHEMA)
+    return symmetrize_and_aggregate(
+        _pdq_pairs(
+            df,
+            pqd_hash_similarity_threshold,
+            indexes_to_check,
+            duplicate_detection_method,
+            max_hex_len,
         )
-    _check_pdq_column_type(df)
-    n_bits = calculate_absolute_threshold(
-        HASH_BITS, pqd_hash_similarity_threshold
     )
-    method = _METHOD_ALIASES.get(duplicate_detection_method)
-    if method is None:
-        raise ValueError(
-            f"unknown duplicate_detection_method {duplicate_detection_method!r};"
-            f" expected one of {sorted(_METHOD_ALIASES)}"
-        )
-    # "auto" resolves after the corpus size is known (below): banded only
-    # when a pigeonhole layout exists AND is selective for this corpus.
-    probe_df = (
-        probe_column_frame(indexes_to_check)
-        if isinstance(indexes_to_check, DataFrame)
-        else None
-    )
-    if (
-        probe_df is None
-        and indexes_to_check is not None
-        and len(indexes_to_check) == 0
-    ):
-        warnings.warn("indexes_to_check is empty; returning empty result")
-        return spark.createDataFrame([], RESULT_SCHEMA)
-
-    def _restrict(side: DataFrame) -> tuple[DataFrame, bool]:
-        if probe_df is not None:
-            return side.join(F.broadcast(probe_df), "index", "semi"), True
-        if indexes_to_check is not None:
-            return (
-                side.where(
-                    F.col("index").isin([str(i) for i in indexes_to_check])
-                ),
-                True,
-            )
-        return side, False
-
-    exploded = exploded_hashes(df)
-    detected = max_hex_len is None
-    if detected:
-        max_hex_len = (
-            exploded.agg(F.max(F.length("hash")).alias("m")).first()["m"] or 0
-        )
-
-    if max_hex_len > 64:
-        probe, broadcast_probe = _restrict(exploded)
-        pairs = _bits_pairs(probe, exploded, n_bits, broadcast_probe)
-        return symmetrize_and_aggregate(pairs)
-
-    # A detected bound is known-true; an ASSUMED bound (the 64 default,
-    # or a caller-passed value) gets the row-time length guard so a
-    # contract-violating longer hash raises instead of left-truncating.
-    corpus = decoded_hashes(
-        df, assert_max_hex=None if detected else max_hex_len
-    )
-    probe, broadcast_probe = _restrict(corpus)
-
-    if method == "auto":
-        # One cheap eager scan decides the physical strategy — the same
-        # information the reference's user encodes by hand when choosing
-        # naive vs bk-tree per the README crossover guidance. sum(size)
-        # is an upper bound on the deduped hash count (scan-only, no
-        # explode/dedup shuffle — counting `exploded` exactly cost ~40%
-        # of the whole naive query at sf0.1); selectivity only needs the
-        # order of magnitude.
-        n_hashes = (
-            df.agg(
-                F.sum(
-                    F.size(F.coalesce(F.col("pdq_hash"), F.array()))
-                ).alias("n")
-            ).first()["n"]
-            or 0
-        )
-        method = (
-            "banded"
-            if _pick_band_layout(n_bits, n_hashes) is not None
-            else "naive"
-        )
-    # Reference P11 stats logging (`pdq_hash.py:236-255`) — plan-time
-    # facts only; execution timing/row counts live in the Spark UI.
-    logger.info(
-        "find_pdq_hash_duplicates: threshold=%s -> n_bits=%d, method=%s, "
-        "probed=%s",
-        pqd_hash_similarity_threshold,
-        n_bits,
-        method,
-        indexes_to_check is not None,
-    )
-
-    if method == "naive":
-        pairs = _naive_pairs(probe, corpus, n_bits, broadcast_probe)
-    else:
-        pairs = _banded_pairs(probe, corpus, n_bits, broadcast_probe)
-    return symmetrize_and_aggregate(pairs)

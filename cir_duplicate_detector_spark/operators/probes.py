@@ -8,9 +8,15 @@ output of a query (millions of ids); a driver-side literal list then
 bloats the plan and serializes through the driver. For that case both
 operators also accept a DataFrame, which joins as a broadcast semi-join
 — distributed end to end, no driver round-trip.
+
+:func:`restrict_to_probes` is the one place that choice is made: the
+PDQ operators restrict their probe side with it, and the URL operator
+restricts the normalized-url rows it takes group keys from.
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -33,3 +39,29 @@ def probe_column_frame(probe: DataFrame) -> DataFrame:
     return probe.select(
         F.col(col).cast("string").alias("index")
     ).dropDuplicates(["index"])
+
+
+def restrict_to_probes(
+    df: DataFrame, indexes_to_check: list[str] | DataFrame | None
+) -> DataFrame:
+    """Rows of ``df`` whose ``index`` is in the probe set; ``df`` itself
+    when there is none. A list becomes a plan-literal ``isin``; a
+    DataFrame becomes a broadcast semi-join."""
+    if indexes_to_check is None:
+        return df
+    if isinstance(indexes_to_check, DataFrame):
+        return df.join(
+            F.broadcast(probe_column_frame(indexes_to_check)), "index", "semi"
+        )
+    return df.where(F.col("index").isin([str(i) for i in indexes_to_check]))
+
+
+def is_empty_probe_list(indexes_to_check) -> bool:
+    """True, with a warning, for an empty list probe set: the operators
+    then return an empty result without planning anything."""
+    if indexes_to_check is None or isinstance(indexes_to_check, DataFrame):
+        return False
+    if len(indexes_to_check):
+        return False
+    warnings.warn("indexes_to_check is empty; returning empty result")
+    return True

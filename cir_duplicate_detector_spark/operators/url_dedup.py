@@ -5,7 +5,10 @@ normalized url is identical, and annotate every member of a >1-sized
 group with the other members' indexes. With a probe set
 (``indexes_to_check``) only groups containing at least one probed index
 survive — but ALL members of a surviving group are emitted
-(bidirectional, ``url.py:87-109``).
+(bidirectional, ``url.py:87-109``). Either probe form (list or
+DataFrame) takes one path: the probed rows' normalized urls
+(:func:`.probes.restrict_to_probes`) semi-join the annotated rows on the
+group key.
 
 Spark shape: one shuffle. ``collect_list(index) OVER (PARTITION BY
 base_url)`` computes group membership without a groupBy+join back
@@ -27,14 +30,13 @@ Default ``None`` keeps exact reference semantics.
 from __future__ import annotations
 
 import logging
-import warnings
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 logger = logging.getLogger(__name__)
 
 from ..functions.url import normalize_url
-from .probes import probe_column_frame
+from .probes import is_empty_probe_list, restrict_to_probes
 
 EMPTY_SCHEMA = "index string, url_duplicates array<string>"
 
@@ -58,7 +60,8 @@ def find_url_duplicates(
     ``indexes_to_check``: a list embeds as a plan literal (reference
     shape, right for small interactive probe sets); a DataFrame joins as
     a broadcast semi-join (right for probe sets that are themselves
-    query outputs — no driver round-trip). Requires unique ``index``
+    query outputs — no driver round-trip). Either way the probed rows
+    give the group keys that survive. Requires unique ``index``
     values: the standalone function removes ALL occurrences of a row's
     own index from its group (``array_remove``); ``detect_duplicates``
     enforces uniqueness when ``validate=True``.
@@ -66,11 +69,7 @@ def find_url_duplicates(
     spark = df.sparkSession
     if "url" not in df.columns or "index" not in df.columns:
         raise ValueError("find_url_duplicates requires `index` and `url` columns")
-    probe_df = None
-    if isinstance(indexes_to_check, DataFrame):
-        probe_df = probe_column_frame(indexes_to_check)
-    elif indexes_to_check is not None and len(indexes_to_check) == 0:
-        warnings.warn("indexes_to_check is empty; returning empty result")
+    if is_empty_probe_list(indexes_to_check):
         return spark.createDataFrame([], EMPTY_SCHEMA)
 
     # Reference stats logging (`url.py:118-126`) — plan-time facts only;
@@ -107,22 +106,15 @@ def find_url_duplicates(
     members = F.collect_list("index").over(Window.partitionBy("base_url"))
     annotated = base.withColumn("members", members).where(F.size("members") > 1)
 
-    if probe_df is not None:
+    if indexes_to_check is not None:
         # Keep whole groups that touch the probe set (bidirectional):
         # probe ids -> their normalized urls -> semi-join on the group key.
         probed_urls = (
-            base.join(F.broadcast(probe_df), "index", "semi")
+            restrict_to_probes(base, indexes_to_check)
             .select("base_url")
             .dropDuplicates(["base_url"])
         )
         annotated = annotated.join(F.broadcast(probed_urls), "base_url", "semi")
-    elif indexes_to_check is not None:
-        # Keep whole groups that touch the probe set (bidirectional).
-        annotated = annotated.where(
-            F.arrays_overlap(
-                "members", F.lit([str(i) for i in indexes_to_check])
-            )
-        )
 
     return annotated.select(
         "index",

@@ -141,6 +141,14 @@ _PLAN_CHANGED: list[str] = [
     # any future plan that does print a family temp path; it produced
     # zero churn on its own because analyzed plans omit locations.)
     *_CANONICALIZER_ONLY,
+    # (d) One path through detect_duplicates: the composite is the full
+    # outer join of the URL and PDQ results (was: rescan + two left
+    # joins + keep filter), and decoded_hashes applies the 64-hex
+    # length guard by default. Same rows (each result is one row per
+    # index with a duplicate; no testdata hash exceeds 64 hex chars).
+    "detect_duplicates",
+    "hash_decode",
+    "pdq_pairs",
 ]
 
 # Per-round edit declarations (round-9 lint, verdict item 6): every
@@ -155,6 +163,23 @@ _PLAN_CHANGED: list[str] = [
 # the round's artifacts) are harmless and cleared opportunistically.
 _PKG = "cir_duplicate_detector_spark"
 _ROUND_EDITS: dict[str, "tuple[str, ...] | str"] = {
+    f"{_PKG}/__init__.py": "detect_duplicates composes its URL and PDQ"
+    " results with one full outer join on index instead of a rescan, two"
+    " left joins and a keep filter; each result is one row per index"
+    " with a duplicate, so the rows are the same (plan change queued in"
+    " _PLAN_CHANGED (d))",
+    f"{_PKG}/operators/pdq.py": "both PDQ entry points share one pair"
+    " pipeline; find_pdq_hash_duplicates' plans are unchanged apart from"
+    " the length-guard error text, and decoded_hashes' new default"
+    " guard only raises on hashes longer than 64 hex chars (plan change"
+    " of its direct users queued in _PLAN_CHANGED (d))",
+    f"{_PKG}/operators/url_dedup.py": "list probe sets take the"
+    " DataFrame path's semi-join on the probed base urls instead of"
+    " arrays_overlap on the member lists: the same groups survive; no"
+    " registered query passes a list probe set",
+    f"{_PKG}/operators/probes.py": "new restrict_to_probes /"
+    " is_empty_probe_list helpers holding the probe restriction the"
+    " operators made inline; same plans",
     f"{_PKG}/plans/__init__.py": "round-15 rotation metadata reset"
     " (cleared round-14 _ROUND_EDITS/_PLAN_CHANGED — all r14 entries"
     " driver-verified and committed); no query plan or result touched",

@@ -9,6 +9,7 @@ import pytest
 from cir_duplicate_detector_spark.operators.pdq import (
     exploded_hashes,
     find_pdq_hash_duplicates,
+    get_pdq_fuzzy_duplicates,
 )
 
 from .conftest import BACKENDS, rows_by_index
@@ -149,7 +150,8 @@ def test_longer_hash_raises_loudly_under_default(spark):
     # The max_hex_len=64 default skips the detection scan on the
     # strength of the 256-bit PDQ contract; a contract-violating longer
     # hash must FAIL AT ROW TIME (decoded_hashes' length guard), never
-    # silently left-truncate through the chunk decoder's lpad.
+    # silently left-truncate through the chunk decoder's lpad. The two
+    # hashes are at distance 1; truncated, they would report distance 0.
     import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
@@ -158,11 +160,31 @@ def test_longer_hash_raises_loudly_under_default(spark):
         [("A", ["f" * 70]), ("B", ["f" * 69 + "e"])],
         "index string, pdq_hash array<string>",
     )
-    with pytest.raises((SparkRuntimeException, Py4JJavaError)) as exc:
-        find_pdq_hash_duplicates(
-            df, pqd_hash_similarity_threshold=0.99
-        ).collect()
-    assert "max_hex_len" in str(exc.value)
+    for call in (find_pdq_hash_duplicates, get_pdq_fuzzy_duplicates):
+        with pytest.raises((SparkRuntimeException, Py4JJavaError)) as exc:
+            call(df, pqd_hash_similarity_threshold=0.999).collect()
+        assert "max_hex_len" in str(exc.value), call.__name__
+        assert "find_pdq_hash_duplicates" in str(exc.value), call.__name__
+
+
+@pytest.mark.parametrize(
+    "call", [find_pdq_hash_duplicates, get_pdq_fuzzy_duplicates]
+)
+def test_auto_resolves_by_corpus_size(spark, call):
+    # t=0.9 is n=26 bits: the (32, 2) band layout covers it, but with
+    # 256 band values it is not selective even for 3 hashes, so "auto"
+    # must run the naive join in both entry points.
+    df = spark.createDataFrame(
+        [("A", ["0" * 64]), ("B", ["0" * 63 + "1"]), ("C", ["f" * 64])],
+        "index string, pdq_hash array<string>",
+    )
+    out = call(
+        df,
+        pqd_hash_similarity_threshold=0.9,
+        duplicate_detection_method="auto",
+    )
+    assert "band_id" not in out._jdf.queryExecution().analyzed().toString()
+    assert sorted(r["index"] for r in out.collect()) == ["A", "B"]
 
 
 def test_longer_hash_mixed_lengths_excess_counts(spark):

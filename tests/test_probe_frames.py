@@ -8,7 +8,10 @@ from __future__ import annotations
 import pytest
 
 from cir_duplicate_detector_spark import detect_duplicates
-from cir_duplicate_detector_spark.operators.pdq import find_pdq_hash_duplicates
+from cir_duplicate_detector_spark.operators.pdq import (
+    find_pdq_hash_duplicates,
+    get_pdq_fuzzy_duplicates,
+)
 from cir_duplicate_detector_spark.operators.url_dedup import find_url_duplicates
 from cir_duplicate_detector_spark.sources.entries import derive_entries
 
@@ -50,16 +53,12 @@ def test_pdq_dataframe_probe_matches_list(spark, entries, probe_ids):
     kwargs = dict(
         pqd_hash_similarity_threshold=0.9,
         duplicate_detection_method="naive",
-        max_hex_len=64,
     )
-    by_list = find_pdq_hash_duplicates(
-        entries, indexes_to_check=probe_ids, **kwargs
-    )
-    by_df = find_pdq_hash_duplicates(
-        entries, indexes_to_check=probe_df, **kwargs
-    )
-    assert _rows(by_list) == _rows(by_df)
-    assert len(_rows(by_df)) > 0
+    for call in (find_pdq_hash_duplicates, get_pdq_fuzzy_duplicates):
+        by_list = call(entries, indexes_to_check=probe_ids, **kwargs)
+        by_df = call(entries, indexes_to_check=probe_df, **kwargs)
+        assert _rows(by_list) == _rows(by_df), call.__name__
+        assert len(_rows(by_df)) > 0, call.__name__
 
 
 def test_detect_duplicates_accepts_probe_frame(spark, entries, probe_ids):
