@@ -75,7 +75,11 @@ _FAMILY_CACHES: list[dict] = []
 # bench copies this map into BENCH_FULL.json ("artifact_builds") so
 # the headline's excluded cold cost is a number anyone can audit.
 # Accumulates across applications in one process; keyed by prefix.
+# A build's own time only: a shared artifact built inside another's
+# build is charged to its own prefix, not to the outer one as well.
 ARTIFACT_BUILD_SECONDS: dict[str, float] = {}
+# Seconds spent in nested builds, one accumulator per build in progress.
+_NESTED_BUILD_SECONDS: list[float] = []
 
 
 def tracked_mkdtemp(prefix: str) -> str:
@@ -156,12 +160,19 @@ def shared_artifact(
     d = tempfile.mkdtemp(prefix=prefix)
     _SHARED_DIRS.append(d)
     t0 = time.perf_counter()
-    val = build(d)
-    elapsed = time.perf_counter() - t0
+    _NESTED_BUILD_SECONDS.append(0.0)
+    try:
+        val = build(d)
+    finally:
+        nested = _NESTED_BUILD_SECONDS.pop()
+        elapsed = time.perf_counter() - t0
+        if _NESTED_BUILD_SECONDS:
+            _NESTED_BUILD_SECONDS[-1] += elapsed
+    own = elapsed - nested
     ARTIFACT_BUILD_SECONDS[prefix] = (
-        ARTIFACT_BUILD_SECONDS.get(prefix, 0.0) + elapsed
+        ARTIFACT_BUILD_SECONDS.get(prefix, 0.0) + own
     )
-    print(f"# artifact {prefix}: {elapsed:.3f}s", file=sys.stderr)
+    print(f"# artifact {prefix}: {own:.3f}s", file=sys.stderr)
     cache[key] = (d, val)
     return val
 

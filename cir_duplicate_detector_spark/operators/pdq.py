@@ -1,18 +1,21 @@
 """PDQ perceptual-hash fuzzy duplicate detection.
 
 Reference pipeline (``cir_duplicate_detector/pdq_hash.py`` +
-``pdq_dup_detect_algorithms/``): explode the per-entry hash lists,
-dedup (index, hash), decode hex→256-bit form, run a Hamming-distance
-similarity self-join (threshold ``n = round(256*(1-t))`` bits), then
-symmetrize matches and aggregate per-entry duplicate/similarity lists.
+``pdq_dup_detect_algorithms/``): explode the per-entry hash lists
+(each list deduplicated in place), decode hex→256-bit form, run a
+Hamming-distance similarity self-join (threshold
+``n = round(256*(1-t))`` bits), then symmetrize matches and aggregate
+per-entry duplicate/similarity lists.
 
 Spark-first physical strategies (chosen like the reference's
 ``duplicate_detection_method`` parameter, ``pdq_hash.py:195-222``):
 
-* ``naive`` — blocked cross join probe×corpus with the codegen'd
-  ``sum(bit_count(xor))`` predicate (reference's O(N·M) scan,
-  ``naive_duplicate_detector.py:18-36``, distributed by Catalyst;
-  probe side broadcast when a probe set restricts it).
+* ``naive`` — all-pairs scan with the codegen'd ``sum(bit_count(xor))``
+  predicate (reference's O(N·M) scan, ``naive_duplicate_detector.py:
+  18-36``, which it parallelises with a process pool over probe rows).
+  A probe set is broadcast and the corpus streams past it; the full
+  self-join runs on a triangular block grid that compares each
+  unordered pair once, its cells spread over every core.
 * ``banded`` — multi-index-hashing candidate generation: split the
   64-hex hash into k equal bands, equi-join on (band_id, band_value),
   then exact-verify. By pigeonhole a pair at distance <= k-1 shares at
@@ -73,6 +76,14 @@ def exploded_hashes(df: DataFrame) -> DataFrame:
     """(index, hash) pairs: null/empty-drop, explode, literal dedup.
 
     Reference P3/P4/P6 (``pdq_hash.py:156-179``, ``utils.py:55-87``).
+    The literal dedup is per row — ``explode(array_distinct(pdq_hash))``
+    — so it costs no shuffle. Under the input contract (``index`` is
+    unique) that is exactly the reference's drop of repeated
+    (index, hash) pairs. A repeated ``index`` cannot change a PDQ result
+    either: a same-index pair is never compared, and every caller
+    reduces the pairs to ``min(dist)`` per (index, dup), so a repeated
+    (index, hash) row only repeats a distance.
+
     Empty-string hashes are dropped alongside nulls: the reference's
     ``hex_to_binary('')`` returns ``''``, whose padded distance to any
     256-bit hash is 256 — unmatchable at every threshold except the
@@ -81,9 +92,8 @@ def exploded_hashes(df: DataFrame) -> DataFrame:
     """
     return (
         df.where(F.col("pdq_hash").isNotNull())
-        .select("index", F.explode("pdq_hash").alias("hash"))
+        .select("index", F.explode(F.array_distinct("pdq_hash")).alias("hash"))
         .where(F.col("hash").isNotNull() & (F.col("hash") != ""))
-        .dropDuplicates(["index", "hash"])
     )
 
 
@@ -152,53 +162,73 @@ def _hash_side(df: DataFrame, prefix: str) -> DataFrame:
 
 
 def _grid_joined(p: DataFrame, c: DataFrame, grid: int) -> DataFrame:
-    """Distributed block-nested-loop: every probe row meets every corpus
-    row exactly once, with NO broadcast of either side.
+    """Distributed block-nested-loop self-join over a triangular block
+    grid: each unordered pair of rows with different indexes meets
+    exactly once, with NO broadcast of either side.
 
-    Each row hashes to its own block (``crc32(index) % grid``) and is
-    replicated across the other axis, so block ``(i, j)`` holds probe
-    block ``i`` × corpus block ``j`` — a grid of ``grid²`` independent
-    cross products, shuffle-partitioned on the block key. Replication is
-    ``grid``× per side (≈√partitions), the textbook BNL trade; nothing
-    ever ships to the driver or an executor's broadcast memory, so the
-    O(N·M) scan distributes at any corpus size.
+    Each row hashes to its own block (``crc32(index) % grid``). A probe
+    row in block ``i`` is replicated to cells ``(i, j)`` for ``j >= i``
+    and a corpus row in block ``j`` to cells ``(i, j)`` for ``i <= j``,
+    so the ``grid·(grid+1)/2`` cells cover the upper triangle of the
+    block matrix: ~N²/2 comparisons at ``(grid+1)/2``× replication per
+    side. Off-diagonal cells keep every pair (rows in different blocks
+    have different indexes); a diagonal cell keeps ``p_index <
+    c_index``, which also drops same-index pairs.
+
+    Both sides are hash-repartitioned on the cell key to an explicit
+    ``max(cells, 2·cores)`` partitions. AQE never coalesces a
+    repartition by number, so the cells spread over every core however
+    small the shuffle is (its byte-based coalescing packed the whole
+    grid into one task), and the join reuses that partitioning without
+    another exchange. Nothing ever ships to the driver or an executor's
+    broadcast memory, so the O(N²) scan distributes at any corpus size.
     """
-    # Repartition BEFORE the ×grid explode (narrow from here on): a
-    # single small parquet file is one scan partition, which would pin
-    # the whole O(N·M) probe work to one task when the optimizer
-    # broadcasts the small grid side instead of shuffling.
-    slices = p.sparkSession.sparkContext.defaultParallelism * 2
-    span = F.explode(F.sequence(F.lit(0), F.lit(grid - 1)))
-    pg = p.repartition(slices).withColumn(
-        "g_i", F.pmod(F.crc32(F.col("p_index")), F.lit(grid)).cast("int")
-    ).withColumn("g_j", span)
-    cg = c.withColumn(
-        "g_j", F.pmod(F.crc32(F.col("c_index")), F.lit(grid)).cast("int")
-    ).withColumn("g_i", span)
+    cores = p.sparkSession.sparkContext.defaultParallelism
+    parts = max(grid * (grid + 1) // 2, 2 * cores)
+
+    def block(col: str):
+        return F.pmod(F.crc32(F.col(col)), F.lit(grid)).cast("int")
+
+    pg = (
+        p.withColumn("g_i", block("p_index"))
+        .withColumn("g_j", F.explode(F.sequence("g_i", F.lit(grid - 1))))
+        .repartition(parts, "g_i", "g_j")
+    )
+    cg = (
+        c.withColumn("g_j", block("c_index"))
+        .withColumn("g_i", F.explode(F.sequence(F.lit(0), "g_j")))
+        .repartition(parts, "g_i", "g_j")
+    )
     # Pin a SHUFFLED hash join building the corpus cell (the hint wins
-    # over AQE's size estimate). Letting AQE broadcast the ×grid-
-    # replicated corpus is wrong twice over: at scale the replicated
-    # side is grid× the corpus (guaranteed executor OOM), and even when
+    # over AQE's size estimate). Letting AQE broadcast the replicated
+    # corpus is wrong twice over: at scale the replicated side is
+    # (grid+1)/2× the corpus (guaranteed executor OOM), and even when
     # it fits, all of a cell's rows share one join key, so the
-    # broadcast hash relation degenerates to grid² mega-chains probed
-    # through one shared cache-hostile map (measured on the 30k-hash
-    # scan: 10-27 s/run with 3x run-to-run swings vs 6-8 s stable with
-    # the per-partition build below). The shuffled build side is ONE
-    # cell (~N/grid rows) per task — bounded, local, and exactly the
-    # memory the BNL math says a task needs.
-    return pg.join(cg.hint("shuffle_hash"), ["g_i", "g_j"]).drop(
-        "g_i", "g_j"
+    # broadcast hash relation degenerates to one mega-chain per cell
+    # probed through one shared cache-hostile map (measured on the
+    # 30k-hash scan: 10-27 s/run with 3x run-to-run swings vs 6-8 s
+    # stable with the per-partition build below). The shuffled build
+    # side is ONE cell (~N/grid rows) per task — bounded, local, and
+    # exactly the memory the BNL math says a task needs.
+    return (
+        pg.join(cg.hint("shuffle_hash"), ["g_i", "g_j"])
+        .where(
+            (F.col("g_i") != F.col("g_j"))
+            | (F.col("p_index") < F.col("c_index"))
+        )
+        .drop("g_i", "g_j")
     )
 
 
 def _grid_size(spark) -> int:
-    """Grid axis length: ≥4 cells per core (grid² cells over 2·cores
-    shuffle partitions) so cell-count granularity — not the balls-into-
-    bins luck of ~1 cell/partition — sets task balance. Replication
-    cost per side is grid×; cell build memory shrinks as 1/grid, so at
-    a fixed corpus a finer grid trades shuffle bytes for balance +
-    bounded build side. At 100 TB callers raise parallelism, and the
-    grid follows as √(8·cores)."""
+    """Grid axis length: ``grid·(grid+1)/2`` ≈ 4 cells per core, so
+    cell-count granularity — not the balls-into-bins luck of ~1 cell
+    per partition — sets task balance (:func:`_grid_joined` gives the
+    join at least one partition per cell). Replication per side is
+    (grid+1)/2×; cell build memory shrinks as 1/grid, so at a fixed
+    corpus a finer grid trades shuffle bytes for balance and a bounded
+    build side. At 100 TB callers raise parallelism, and the grid
+    follows as √(8·cores)."""
     import math
 
     return max(2, math.isqrt(spark.sparkContext.defaultParallelism * 8))
@@ -207,28 +237,36 @@ def _grid_size(spark) -> int:
 def _all_pairs_joined(
     p: DataFrame, c: DataFrame, broadcast_probe: bool
 ) -> DataFrame:
-    """Every probe row against every corpus row. A restricted probe set
-    is broadcast and the corpus streams (the reference's asymmetric
-    probe/corpus shape, P9); the full self-join uses the block-grid join
-    (:func:`_grid_joined`) — the O(N²) comparison count is inherent to
-    an all-pairs scan, but the memory footprint must not be:
-    broadcasting the whole corpus OOMs executors long before the math
-    finishes at scale.
+    """Every probe row against every corpus row of another index — the
+    one place the all-pairs joins exclude self-pairs. A restricted probe
+    set is broadcast and the corpus streams (the reference's asymmetric
+    probe/corpus shape, P9), keeping ``p_index != c_index``. The full
+    self-join uses the triangular block grid (:func:`_grid_joined`),
+    which yields each unordered pair once — the O(N²) comparison count
+    is inherent to an all-pairs scan, but the memory footprint must not
+    be: broadcasting the whole corpus OOMs executors long before the
+    math finishes at scale.
     """
     spark = p.sparkSession
     if broadcast_probe:
         slices = spark.sparkContext.defaultParallelism * 2
-        return c.repartition(slices).crossJoin(F.broadcast(p))
+        return (
+            c.repartition(slices)
+            .crossJoin(F.broadcast(p))
+            .where(F.col("p_index") != F.col("c_index"))
+        )
     return _grid_joined(p, c, _grid_size(spark))
 
 
 def _naive_pairs(
     probe: DataFrame, corpus: DataFrame, n_bits: int, broadcast_probe: bool
 ) -> DataFrame:
-    """All-pairs scan: probe × corpus, keep dist<=n, self excluded.
+    """All-pairs scan: probe × corpus, keep dist<=n.
 
     The Hamming predicate is a flat xor/bit_count expression inside
-    whole-stage codegen, over :func:`_all_pairs_joined`.
+    whole-stage codegen, over :func:`_all_pairs_joined` (which excludes
+    self-pairs, and yields each unordered pair once without a probe
+    set).
     """
     joined = _all_pairs_joined(
         _hash_side(probe, "p_"), _hash_side(corpus, "c_"), broadcast_probe
@@ -241,7 +279,6 @@ def _naive_pairs(
     # short-circuit AND rejects a random far pair after 1-2 of the 4
     # xor/bit_count terms (at n=26 the first word alone kills ~92% of
     # random pairs; measured 4.2 s -> 3.2 s on the 30k-hash grid scan).
-    joined = joined.where(F.col("p_index") != F.col("c_index"))
     prefix = None
     for i in range(NUM_CHUNKS64):
         term = F.bit_count(
@@ -263,8 +300,9 @@ def _bits_pairs(
     similarity still normalized by 256). Decodes to the reference's
     binary-string form and compares with the padded Hamming kernel.
     Slower than the chunked fast path; only selected when long hashes
-    are actually present. A pair may repeat (one row per matching hash
-    pair); both callers reduce to the minimum distance.
+    are actually present. Pairs come as :func:`_all_pairs_joined` yields
+    them, one row per matching hash pair; both callers reduce to the
+    minimum distance.
     """
     p = probe.select(
         F.col("index").alias("p_index"), hex_to_bits("hash").alias("p_bits")
@@ -274,7 +312,6 @@ def _bits_pairs(
     )
     return (
         _all_pairs_joined(p, c, broadcast_probe)
-        .where(F.col("p_index") != F.col("c_index"))
         .withColumn("dist", bits_hamming(F.col("p_bits"), F.col("c_bits")))
         .where(F.col("dist") <= F.lit(n_bits))
         .select(
@@ -333,7 +370,8 @@ def _banded_pairs(
     with the flat codegen Hamming predicate — duplicate candidates from
     multi-band collisions are NOT pre-deduped (that extra shuffle costs
     more than re-running a few xor/bit_counts); the downstream
-    min-distance aggregation dedups pairs anyway.
+    min-distance aggregation dedups pairs anyway. Without a probe set
+    each unordered pair is kept once, as ``p_index < c_index``.
     """
     layout = _pick_band_layout(n_bits)
     if layout is None:
@@ -345,7 +383,11 @@ def _banded_pairs(
     cb = _bands(corpus, k, w, "c_")
     return (
         pb.join(cb, ["band_id", "band_val"])
-        .where(F.col("p_index") != F.col("c_index"))
+        .where(
+            F.col("p_index") != F.col("c_index")
+            if broadcast_probe
+            else F.col("p_index") < F.col("c_index")
+        )
         .withColumn("dist", hamming64("p_h", "c_h"))
         .where(F.col("dist") <= F.lit(n_bits))
         .groupBy(F.col("p_index").alias("index"), F.col("c_index").alias("dup"))
@@ -353,15 +395,12 @@ def _banded_pairs(
     )
 
 
-def symmetrize_and_aggregate(pairs: DataFrame) -> DataFrame:
-    """Reference P10 (``pdq_hash.py:18-73``): make matches bidirectional,
-    keep one distance per (index, dup) — canonicalized to min(dist) =
-    max(similarity), SURVEY §7.4.2 — and aggregate sorted parallel lists.
-    """
-    # Both orientations from ONE pass over `pairs` (a union of two
-    # selects would recompute the upstream O(N·M) similarity scan per
-    # branch — Spark does not share non-cached subplans).
-    sym = pairs.select(
+def _both_orientations(pairs: DataFrame) -> DataFrame:
+    """Each ``(index, dup, dist)`` row as itself and as ``(dup, index,
+    dist)``, from ONE pass over ``pairs`` (a union of two selects would
+    recompute the upstream O(N·M) similarity scan per branch — Spark
+    does not share non-cached subplans)."""
+    return pairs.select(
         F.explode(
             F.array(
                 F.struct(
@@ -377,7 +416,18 @@ def symmetrize_and_aggregate(pairs: DataFrame) -> DataFrame:
             )
         ).alias("e")
     ).select("e.index", "e.dup", "e.dist")
-    best = sym.groupBy("index", "dup").agg(F.min("dist").alias("dist"))
+
+
+def symmetrize_and_aggregate(pairs: DataFrame) -> DataFrame:
+    """Reference P10 (``pdq_hash.py:18-73``): make matches bidirectional,
+    keep one distance per (index, dup) — canonicalized to min(dist) =
+    max(similarity), SURVEY §7.4.2 — and aggregate sorted parallel lists.
+    """
+    best = (
+        _both_orientations(pairs)
+        .groupBy("index", "dup")
+        .agg(F.min("dist").alias("dist"))
+    )
     agg = best.groupBy("index").agg(
         F.array_sort(F.collect_list(F.struct("dup", "dist"))).alias("ms")
     )
@@ -400,6 +450,8 @@ def _pdq_pairs(
     """The one PDQ pair pipeline behind both entry points: flat
     ``(index, dup, dist)`` matches of the probe set against the corpus,
     self excluded. A pair may repeat; callers reduce to min(dist).
+    Without a probe set each unordered index pair appears once per
+    matching hash pair, in either orientation.
 
     Validates the columns and the method name, restricts the probe side
     (:func:`.probes.restrict_to_probes` — the restricted side is the
@@ -499,17 +551,19 @@ def get_pdq_fuzzy_duplicates(
     ``max_hex_len=64`` default: a hash longer than 64 hex chars raises
     at row time (use ``find_pdq_hash_duplicates`` for longer hashes).
     """
-    return (
-        _pdq_pairs(
-            df,
-            pqd_hash_similarity_threshold,
-            indexes_to_check,
-            duplicate_detection_method,
-            max_hex_len=64,
-        )
-        .groupBy("index", "dup")
-        .agg(F.min("dist").alias("dist"))
+    pairs = _pdq_pairs(
+        df,
+        pqd_hash_similarity_threshold,
+        indexes_to_check,
+        duplicate_detection_method,
+        max_hex_len=64,
     )
+    if indexes_to_check is None:
+        # The self-join yields each unordered pair once; the result
+        # lists both orientations, as the probe-set form does for a
+        # probe set of every index.
+        pairs = _both_orientations(pairs)
+    return pairs.groupBy("index", "dup").agg(F.min("dist").alias("dist"))
 
 
 def find_pdq_hash_duplicates(

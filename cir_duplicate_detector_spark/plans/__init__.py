@@ -149,6 +149,24 @@ _PLAN_CHANGED: list[str] = [
     "detect_duplicates",
     "hash_decode",
     "pdq_pairs",
+    # (e) Naive PDQ self-join on a triangular block grid: each unordered
+    # hash pair is compared once, the cells are hash-repartitioned to
+    # an explicit count, and get_pdq_fuzzy_duplicates emits both
+    # orientations before its min. exploded_hashes dedups each hash
+    # list in place (array_distinct) instead of a dropDuplicates
+    # shuffle, and _banded_pairs keeps p_index < c_index without a
+    # probe set. `pdq_pairs` is now get_pdq_fuzzy_duplicates itself.
+    # Same rows: every row has a unique index, and each result reduces
+    # to min(dist) per (index, dup) over both orientations. The list is
+    # every registered row whose plan fingerprint the edit changes.
+    "hash_explode_dedup",
+    "pdq_duplicates_naive",
+    "pdq_duplicates_banded",
+    "pdq_duplicates_probed",
+    "pdq_duplicates_t08_probed",
+    "pdq_duplicates_t08_probe30",
+    "dup_overlap",
+    "image_pdq_near_dup",
 ]
 
 # Per-round edit declarations (round-9 lint, verdict item 6): every
@@ -168,11 +186,26 @@ _ROUND_EDITS: dict[str, "tuple[str, ...] | str"] = {
     " left joins and a keep filter; each result is one row per index"
     " with a duplicate, so the rows are the same (plan change queued in"
     " _PLAN_CHANGED (d))",
-    f"{_PKG}/operators/pdq.py": "both PDQ entry points share one pair"
-    " pipeline; find_pdq_hash_duplicates' plans are unchanged apart from"
-    " the length-guard error text, and decoded_hashes' new default"
-    " guard only raises on hashes longer than 64 hex chars (plan change"
-    " of its direct users queued in _PLAN_CHANGED (d))",
+    f"{_PKG}/operators/pdq.py": (
+        "detect_duplicates",
+        "hash_decode",
+        "pdq_pairs",
+        "hash_explode_dedup",
+        "pdq_duplicates_naive",
+        "pdq_duplicates_banded",
+        "pdq_duplicates_probed",
+        "pdq_duplicates_t08_probed",
+        "pdq_duplicates_t08_probe30",
+        "dup_overlap",
+        "image_pdq_near_dup",
+    ),  # one pair pipeline behind both PDQ entry points with the
+    # default 64-hex length guard (see _PLAN_CHANGED (d)); then the
+    # triangular-grid self-join, per-row literal dedup and one-pass
+    # orientation explode (see _PLAN_CHANGED (e)). Rows unchanged.
+    f"{_PKG}/plans/core_queries.py": ("pdq_pairs",),
+    # pdq_pairs is get_pdq_fuzzy_duplicates(t=0.9, naive) with a bigint
+    # dist instead of a private _naive_pairs call (see _PLAN_CHANGED
+    # (e)); same rows
     f"{_PKG}/operators/url_dedup.py": "list probe sets take the"
     " DataFrame path's semi-join on the probed base urls instead of"
     " arrays_overlap on the member lists: the same groups survive; no"
@@ -187,7 +220,8 @@ _ROUND_EDITS: dict[str, "tuple[str, ...] | str"] = {
     " (VERDICT r14 item 3: per-prefix build seconds recorded into"
     " ARTIFACT_BUILD_SECONDS and printed to stderr, published by the"
     " bench as BENCH_FULL.json artifact_builds); observability only,"
-    " no query plan or result touched",
+    " no query plan or result touched. A build nested inside another"
+    " build is charged to its own prefix only",
     f"{_PKG}/plans/ext_dedup.py": (
         "upsert_labels_agreement",
         "dup_labels_compact",

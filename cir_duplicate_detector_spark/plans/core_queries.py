@@ -21,6 +21,7 @@ from ..operators.pdq import (
     decoded_hashes,
     exploded_hashes,
     find_pdq_hash_duplicates,
+    get_pdq_fuzzy_duplicates,
 )
 from ..operators.url_dedup import find_url_duplicates
 from ..sources.entries import derive_entries, entries_sql
@@ -250,25 +251,12 @@ SELECT * FROM chunks
 """
 
 
-def _pdq_pairs_df(spark, sf_dir, probed: bool):
-    from ..operators.pdq import _naive_pairs  # physical strategy reuse
-
-    entries = _entries(spark, sf_dir)
-    corpus = decoded_hashes(entries)
-    probe = corpus
-    if probed:
-        probe = corpus.join(
-            F.broadcast(_probe_df(spark, sf_dir)), "index", "semi"
-        )
-    pairs = _naive_pairs(probe, corpus, 26, broadcast_probe=probed)
-    return pairs.groupBy("index", "dup").agg(
-        F.min("dist").cast("bigint").alias("dist")
-    )
-
-
 def q_pdq_pairs(spark, sf_dir):
     # A2/A3 flat view: matching pairs with min Hamming distance (t=0.9).
-    return _pdq_pairs_df(spark, sf_dir, probed=False)
+    pairs = get_pdq_fuzzy_duplicates(
+        _entries(spark, sf_dir), PDQ_THRESHOLD, None, "naive"
+    )
+    return pairs.withColumn("dist", F.col("dist").cast("bigint"))
 
 
 SQL_PDQ_PAIRS = f"""

@@ -152,14 +152,45 @@ def test_shared_artifact_records_build_seconds(spark):
     # a second call is a memoized serve: no additional build time
     cache.shared_artifact(fam, spark, sf, "cache_test_t_", build)
     assert cache.ARTIFACT_BUILD_SECONDS["cache_test_t_"] == first
+
+    # A build that triggers another family's build is charged its own
+    # time only; the nested build's time goes to the nested prefix.
+    import time
+
+    outer_fam: dict = {}
+    inner_fam: dict = {}
+    for p in ("cache_test_outer_", "cache_test_inner_"):
+        cache.ARTIFACT_BUILD_SECONDS.pop(p, None)
+
+    def inner_build(d):
+        time.sleep(0.3)
+        return d
+
+    def outer_build(d):
+        cache.shared_artifact(
+            inner_fam, spark, sf, "cache_test_inner_", inner_build
+        )
+        return d
+
+    cache.shared_artifact(
+        outer_fam, spark, sf, "cache_test_outer_", outer_build
+    )
+    inner = cache.ARTIFACT_BUILD_SECONDS["cache_test_inner_"]
+    outer = cache.ARTIFACT_BUILD_SECONDS["cache_test_outer_"]
+    assert inner >= 0.3
+    assert 0.0 <= outer < 0.2
     import shutil
 
-    for d, _ in fam.values():
-        if d in cache._SHARED_DIRS:
-            cache._SHARED_DIRS.remove(d)
-        shutil.rmtree(d, ignore_errors=True)
-    fam.clear()
+    for f in (fam, outer_fam, inner_fam):
+        for d, _ in f.values():
+            if d in cache._SHARED_DIRS:
+                cache._SHARED_DIRS.remove(d)
+            shutil.rmtree(d, ignore_errors=True)
+        f.clear()
     cache._FAMILY_CACHES[:] = [
-        x for x in cache._FAMILY_CACHES if x is not fam
+        x
+        for x in cache._FAMILY_CACHES
+        if not any(x is f for f in (fam, outer_fam, inner_fam))
     ]
-    cache.ARTIFACT_BUILD_SECONDS.pop("cache_test_t_", None)
+    for p in ("cache_test_t_", "cache_test_outer_", "cache_test_inner_"):
+        cache.ARTIFACT_BUILD_SECONDS.pop(p, None)

@@ -53,16 +53,83 @@ def test_pdq_naive_self_join_never_broadcasts_corpus(spark):
 
 
 def test_grid_join_covers_all_pairs(spark):
+    from itertools import combinations
+
     from pyspark.sql import functions as F
 
     from cir_duplicate_detector_spark.operators.pdq import _grid_joined
 
-    p = spark.range(37).select(F.col("id").cast("string").alias("p_index"))
-    c = spark.range(41).select(F.col("id").cast("string").alias("c_index"))
-    got = _grid_joined(p, c, 4)
-    # Every (probe, corpus) pair exactly once — the BNL contract.
-    assert got.count() == 37 * 41
-    assert got.distinct().count() == 37 * 41
+    # One relation, several hashes per index (3 for most, 1 for some):
+    # the self-join contract is that each unordered pair of rows with
+    # different indexes meets exactly once and no same-index pair meets.
+    rows = [
+        (f"e{i}", f"h{i}_{k}") for i in range(23) for k in range(1 + 2 * (i % 3 > 0))
+    ]
+    df = spark.createDataFrame(rows, "index string, hash string")
+    p = df.select(F.col("index").alias("p_index"), F.col("hash").alias("p_hash"))
+    c = df.select(F.col("index").alias("c_index"), F.col("hash").alias("c_hash"))
+    got = [
+        frozenset([(r.p_index, r.p_hash), (r.c_index, r.c_hash)])
+        for r in _grid_joined(p, c, 4).collect()
+    ]
+    want = {
+        frozenset([a, b]) for a, b in combinations(rows, 2) if a[0] != b[0]
+    }
+    assert len(got) == len(set(got)) == len(want)
+    assert set(got) == want
+
+
+def _final_plan_nodes(plan):
+    """Every node of an executed (final, for AQE) physical plan, walking
+    into adaptive query stages."""
+    todo, nodes = [plan], []
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        nodes.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def test_naive_self_join_runs_on_every_core(spark):
+    # AQE's byte-based coalescing must not pack the grid's cells into
+    # one task: a few hundred hashes make a shuffle far under its
+    # minimum partition size, and the pair join still has to run on at
+    # least one task per core of the local[4] session, fed by no
+    # coalesced shuffle read.
+    import random
+
+    from cir_duplicate_detector_spark.operators.pdq import (
+        get_pdq_fuzzy_duplicates,
+    )
+
+    # 150 random hashes and a one-bit near-copy of each: a non-empty
+    # result, so AQE cannot replace the plan by an empty relation.
+    rng = random.Random(7)
+    rows = []
+    for i in range(150):
+        h = rng.getrandbits(256)
+        rows.append((f"e{i}", [f"{h:064x}"]))
+        rows.append((f"n{i}", [f"{h ^ (1 << rng.randrange(256)):064x}"]))
+    df = spark.createDataFrame(rows, "index string, pdq_hash array<string>")
+    pairs = get_pdq_fuzzy_duplicates(df, 0.8, None, "naive")
+    assert len(pairs.collect()) == 300
+    nodes = _final_plan_nodes(pairs._jdf.queryExecution().executedPlan())
+    joins = [n for n in nodes if n.nodeName() == "ShuffledHashJoin"]
+    assert len(joins) == 1
+    join = joins[0]
+    assert join.outputPartitioning().numPartitions() >= 4
+    feed = [join.left(), join.right()]
+    assert not any(
+        n.nodeName() == "AQEShuffleRead" and n.isCoalescedRead() for n in feed
+    )
 
 
 def test_pdq_banded_is_equijoin(spark):

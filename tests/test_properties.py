@@ -359,3 +359,106 @@ def test_concat_ppm_stream_parses_every_frame(dims, seed):
         assert arr.shape == (h, w, 3)
         assert bytes(arr.tobytes()) == raster
     assert pos == len(payload)
+
+
+# ------------------------------------ PDQ pair builders vs brute force
+
+def _flip_bits(h: int, k: int, rng) -> int:
+    for b in rng.sample(range(256), k):
+        h ^= 1 << b
+    return h
+
+
+@st.composite
+def pdq_corpora(draw):
+    """Small corpora of 1-3 hashes per entry: hashes repeat within and
+    across entries, and near-copies sit at the bound and one bit either
+    side of it."""
+    import random
+
+    t = draw(st.sampled_from([0.9, 0.95]))
+    n = calculate_absolute_threshold(256, t)
+    rng = random.Random(draw(st.integers(0, 2**32 - 1)))
+    pool = [rng.getrandbits(256) for _ in range(draw(st.integers(1, 3)))]
+    entries = []
+    for i in range(draw(st.integers(2, 9))):
+        hashes = []
+        for _ in range(draw(st.integers(1, 3))):
+            kind = draw(st.sampled_from(["pool", "near", "far", "again"]))
+            if kind == "again" and hashes:
+                h = hashes[-1]
+            elif kind == "far":
+                h = rng.getrandbits(256)
+            else:
+                h = rng.choice(pool)
+                if kind == "near":
+                    h = _flip_bits(h, n + draw(st.integers(-1, 1)), rng)
+            hashes.append(h)
+        entries.append((f"e{i}", hashes))
+    probes = sorted(
+        draw(
+            st.sets(
+                st.sampled_from([e[0] for e in entries] + ["missing"]),
+                min_size=1,
+            )
+        )
+    )
+    return t, n, entries, probes
+
+
+def model_pdq_pairs(entries, n, probes):
+    # reference naive_duplicate_detector.py: every probed entry against
+    # every other entry, min Hamming distance over their hash lists.
+    out = {}
+    for a, ha in entries:
+        if probes is not None and a not in probes:
+            continue
+        for b, hb in entries:
+            if a != b:
+                d = min(bin(x ^ y).count("1") for x in ha for y in hb)
+                if d <= n:
+                    out[(a, b)] = d
+    return out
+
+
+def model_pdq_duplicates(pairs):
+    # reference pdq_hash.py:18-73: both orientations, min distance,
+    # per-entry lists sorted by duplicate index.
+    best = {}
+    for (a, b), d in pairs.items():
+        for key in ((a, b), (b, a)):
+            best[key] = min(best.get(key, d), d)
+    per = {}
+    for (a, b), d in sorted(best.items()):
+        dups, sims = per.setdefault(a, ([], []))
+        dups.append(b)
+        sims.append(1 - d / 256)
+    return per
+
+
+@SETTINGS
+@given(pdq_corpora())
+def test_pdq_duplicates_match_brute_force(spark, corpus):
+    from cir_duplicate_detector_spark.operators.pdq import (
+        find_pdq_hash_duplicates,
+        get_pdq_fuzzy_duplicates,
+    )
+
+    t, n, entries, probes = corpus
+    # Cached, so the eight calls below scan it without Python workers.
+    df = spark.createDataFrame(
+        [(i, [f"{h:064x}" for h in hs]) for i, hs in entries],
+        "index string, pdq_hash array<string>",
+    ).cache()
+    for probe in (None, probes):
+        want = model_pdq_pairs(entries, n, probe)
+        for method in ("naive", "banded"):
+            got = get_pdq_fuzzy_duplicates(df, t, probe, method).collect()
+            assert len(got) == len(want)
+            assert {(r["index"], r.dup): r.dist for r in got} == want
+            got = find_pdq_hash_duplicates(df, probe, t, method).collect()
+            assert {
+                r["index"]: (r.pdq_hash_duplicates, r.pdq_hash_similarities)
+                for r in got
+            } == model_pdq_duplicates(want)
+    df.unpersist()
